@@ -976,7 +976,7 @@ case class PqAdcSum(left: Expression, right: Expression, ksub: Int)
  * scale 0 (the constant-0 lambda ignores the element); a NaN element
  * makes scale NaN (Greatest ranks NaN largest), every ratio then rounds
  * through NaN, and the int cast RAISES — Spark 4 runs ANSI by default,
- * so the legacy chain throws CAST_OVERFLOW on non-finite input and this
+ * so the HOF chain throws CAST_OVERFLOW on non-finite input and this
  * expression throws a matching ArithmeticException. Finite inputs can
  * never overflow: |x| <= max|x| = 127·scale bounds every ratio to
  * [-127, 127] by construction.
@@ -1015,8 +1015,9 @@ object QuantizeInt8 {
     while (i < n) {
       if (!arr.isNullAt(i)) {
         val a = math.abs(arr.getDouble(i))
-        // Greatest semantics: NaN ranks above everything and sticks
-        if (!(a <= m)) m = a
+        // Greatest semantics: NaN ranks above everything and sticks (a NaN
+        // `a` poisons m; once m is NaN no later element may replace it)
+        if (!java.lang.Double.isNaN(m) && !(a <= m)) m = a
       }
       i += 1
     }
@@ -1031,7 +1032,7 @@ object QuantizeInt8 {
             val r = arr.getDouble(j) / scale
             if (java.lang.Double.isNaN(r) || java.lang.Double.isInfinite(r))
               // a non-finite ratio only arises from NaN/Inf elements; the
-              // legacy transform's double→int cast raises CAST_OVERFLOW
+              // HOF chain's double→int cast raises CAST_OVERFLOW
               // there (ANSI, the Spark 4 default) — match it
               throw new ArithmeticException(
                 "quantize_int8: non-finite quantization ratio " +

@@ -179,31 +179,14 @@ object Dedup {
     * cache once the result plan is garbage-collected (the Skyline
     * pattern). */
   private[ops] def pinIfLarge(source: DataFrame, plan: DataFrame): DataFrame = {
-    // r17: pin mode is a session conf so plan-rewrite arms can be A/B'd
-    // interleaved in one JVM (the only contention-robust measurement on a
-    // shared sandbox).
-    //  - "legacy" (default): the size-gated Row-persist form.
-    //  - "checkpoint": LAZY localCheckpoint of every pin candidate, no
-    //    size gate. Measured AT BEST a wash (x_bm25 −0.08 s at 7
-    //    interleaved runs — it does delete that plan's duplicated corpus
-    //    tokenize pass) and clearly worse where the pin freezes a
-    //    well-parallelized subtree or blocks pruning below it
-    //    (d_jaccard_prefix +0.86 s, x_perplexity +0.20 s) — kept as an
-    //    experiment arm, not the default.
-    //  - "off": never pin.
-    source.sparkSession.conf.get("spark.graft.pin.mode", "legacy") match {
-      case "off" => plan
-      case "checkpoint" => plan.localCheckpoint(false)
-      case _ =>
-        val sz = source.queryExecution.optimizedPlan.stats.sizeInBytes
-        val sentinel = BigInt(
-          source.sparkSession.sessionState.conf.defaultSizeInBytes)
-        if (sz <= (256L << 20) || sz >= sentinel) plan
-        else {
-          val rdd = plan.rdd
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          source.sparkSession.createDataFrame(rdd, plan.schema)
-        }
+    val sz = source.queryExecution.optimizedPlan.stats.sizeInBytes
+    val sentinel = BigInt(
+      source.sparkSession.sessionState.conf.defaultSizeInBytes)
+    if (sz <= (256L << 20) || sz >= sentinel) plan
+    else {
+      val rdd = plan.rdd
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      source.sparkSession.createDataFrame(rdd, plan.schema)
     }
   }
 
@@ -601,21 +584,14 @@ object Dedup {
     // "wash" verdict predated the bench session's 256k AQE floor in the
     // A/B tool). Fault-tolerance note: localCheckpoint truncates lineage,
     // so an executor loss mid-query fails the query instead of
-    // recomputing — same trade Graph/marginMinePairs already make; the
-    // `legacy` arm keeps the size-gated persist for deployments that
-    // prefer it, `off` disables pinning for A/Bs.
-    val weightsPlan = terms
+    // recomputing — same trade Graph/marginMinePairs already make.
+    val weights = terms
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("__term"))))
       .filter(col("__df") <= maxDf)
       .crossJoin(broadcast(nDocs))
       .select(col(idCol), col("__term"), col("__df"),
         (col("__tf") * log(col("__n") / col("__df"))).as("__w"))
-    val weights =
-      df.sparkSession.conf.get("spark.graft.tfidf.pin", "checkpoint") match {
-        case "off" => weightsPlan
-        case "legacy" => pinIfLarge(df, weightsPlan)
-        case _ => weightsPlan.localCheckpoint(false)
-      }
+      .localCheckpoint(false)
     val norms = weights.groupBy(col(idCol))
       .agg(sqrt(sum(col("__w") * col("__w"))).as("__norm"))
     // df=1 terms contribute to norms but can never meet a partner — a

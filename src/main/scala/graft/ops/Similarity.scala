@@ -963,35 +963,26 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       k: Int = 4, minMargin: Double = 1.0): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val spark = a.sparkSession
     import org.apache.spark.sql.expressions.Window
     val pa = a.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
     val pb = b.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
-    val scoredPlan = pa.crossJoin(pb)
+    // lazy localCheckpoint (r17): the ranked set has three consumers; an
+    // .rdd persist round-tripped every scored row through boxed external
+    // Rows — the pinned 250k-row set read back as ~40 MB per consumer
+    // (profiled); the checkpoint stores the operator's UnsafeRows directly
+    // (~4x smaller, no conversion) and adds no barrier.
+    // Fault-tolerance trade (r18, advisory): localCheckpoint TRUNCATES
+    // lineage into non-replicated storage — on a real cluster an executor
+    // loss mid-query fails the query instead of recomputing the pinned
+    // partitions.
+    val ranked = pa.crossJoin(pb)
       .select(col("id_a"), col("id_b"),
         cosineFast(col("__va"), col("__vb")).as("__cos"))
       .withColumn("__ra", row_number().over(
         Window.partitionBy(col("id_a")).orderBy(col("__cos").desc, col("id_b").asc)))
       .withColumn("__rb", row_number().over(
         Window.partitionBy(col("id_b")).orderBy(col("__cos").desc, col("id_a").asc)))
-    // lazy localCheckpoint (r17): the old .rdd persist round-tripped every
-    // scored row through boxed external Rows — the pinned 250k-row set
-    // read back as ~40 MB per consumer (profiled); the checkpoint stores
-    // the operator's UnsafeRows directly (~4x smaller, no conversion) and
-    // adds no barrier. Same three-consumer reuse semantics. The legacy
-    // arm stays reachable for interleaved A/Bs via spark.graft.margin.pin.
-    // Fault-tolerance trade (r18, advisory): localCheckpoint TRUNCATES
-    // lineage into non-replicated storage — on a real cluster an executor
-    // loss mid-query fails the query instead of recomputing the pinned
-    // partitions, where the legacy MEMORY_AND_DISK persist kept lineage.
-    // Deployments that prefer recompute-on-loss over the boxed-Row cost
-    // set spark.graft.margin.pin=legacy.
-    val ranked =
-      if (spark.conf.get("spark.graft.margin.pin", "checkpoint") == "legacy") {
-        val rankedRdd = scoredPlan.rdd
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        spark.createDataFrame(rankedRdd, scoredPlan.schema)
-      } else scoredPlan.localCheckpoint(false)
+      .localCheckpoint(false)
     val avgA = ranked.filter(col("__ra") <= k)
       .groupBy(col("id_a")).agg(avg(col("__cos")).as("__avga"))
     val avgB = ranked.filter(col("__rb") <= k)
@@ -1211,10 +1202,7 @@ object Similarity {
    * zero rounding — the same rule DuckDB's `round` applies), so the
    * transform is exactly replayable in the oracle.
    *
-   * Scale shape: pure narrow per-row map work, no shuffle; the HOF
-   * `transform` allocates one 64-element array per row, acceptable for a
-   * write-once storage-prep pass (unlike the per-candidate join work that
-   * justified the native [[graft.functions.HyperplaneSig]]).
+   * Scale shape: pure narrow per-row map work, no shuffle.
    */
   def quantizeInt8(df: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
@@ -1222,30 +1210,16 @@ object Similarity {
     // interleaved) and PlanQualitySpec pins this op as a pure narrow map
     // — no exchange before the write; left narrow deliberately)
     // r18: the quantization runs in the native QuantizeInt8 expression —
-    // one codegen'd pass per row where the previous aggregate + transform
-    // HOF chain paid interpreted per-ELEMENT lambda eval (s_quantize:
-    // 0.78 s of stable single-task lambda time at sf0.1, ~1.5 ms/row on
-    // 64-dim vectors). Bit-identical (QuantizeParitySpec pins the legacy
-    // form, including the null/NaN/Inf quirks); `legacy` arm kept for
-    // interleaved A/Bs.
-    if (df.sparkSession.conf.get("spark.graft.quantize.impl", "native")
-        == "legacy") {
-      val maxabs = aggregate(col(vecCol), lit(0.0),
-        (a, x) => greatest(a, abs(x.cast("double"))))
-      df.withColumn("scale", maxabs / lit(127.0))
-        .withColumn("qvec",
-          when(col("scale") === 0.0,
-            transform(col(vecCol), _ => lit(0)))
-            .otherwise(transform(col(vecCol), x =>
-              greatest(lit(-127), least(lit(127),
-                round(x.cast("double") / col("scale")).cast("int"))))))
-    } else {
-      val q = GraftFunctions.quantize_int8(col(vecCol).cast("array<double>"))
-      df.withColumn("__q8", q)
-        .withColumn("scale", col("__q8.scale"))
-        .withColumn("qvec", col("__q8.qvec"))
-        .drop("__q8")
-    }
+    // one codegen'd pass per row where an aggregate + transform HOF chain
+    // paid interpreted per-ELEMENT lambda eval (s_quantize: 0.78 s of
+    // stable single-task lambda time at sf0.1, ~1.5 ms/row on 64-dim
+    // vectors). Bit-identical to that chain (QuantizeParitySpec keeps it
+    // as the reference, including the null/NaN/Inf quirks).
+    val q = GraftFunctions.quantize_int8(col(vecCol).cast("array<double>"))
+    df.withColumn("__q8", q)
+      .withColumn("scale", col("__q8.scale"))
+      .withColumn("qvec", col("__q8.qvec"))
+      .drop("__q8")
   }
 
   /**

@@ -597,35 +597,21 @@ object TextAnalysis {
     // with their aggregates, and the added exchange + stage barriers cost
     // more than the tokenize parallelism buys; left as-is deliberately)
     val toks = docs.select(col(idCol), explode(tokens(col(textCol))).as("__term"))
-    // r18: the queried-terms prune joins BELOW the tf aggregate, not above
-    // it (§2.3 "shuffle fewer bytes"): the optimizer cannot push an inner
-    // join under a groupBy itself, so the r17 shape exchanged the ENTIRE
-    // corpus postings and discarded every non-query term afterwards.
-    // Pruning pre-aggregate is count-preserving (the term is a group key,
-    // so dropping whole groups before or after counting is identical) and
-    // shrinks the postings exchange from corpus-wide to query-terms-only.
     val qterms = queries.select(col(queryIdCol),
       explode(array_distinct(tokens(col(queryTextCol)))).as("__term"))
     val qt = qterms.select(col("__term")).distinct()
-    // conf arms for the interleaved A/B (same convention as
-    // spark.graft.fanout.enabled): "post" (default) joins the queried-term
-    // prune above the tf aggregate, "pre" below it. "pre" is the §2.3
-    // scale shape — it keeps the postings EXCHANGE proportional to the
-    // query workload instead of the corpus vocabulary — but the r18
-    // interleaved A/B at 32 cores measured it 0.50 s SLOWER on the x_bm25
-    // bench row (min of 5/arm: 1.60 vs 1.10): the bench queries are
-    // stopword-heavy (first-5-token prefixes), so the prune removes
-    // almost nothing locally while the pre-aggregate probe pays a
+    // The queried-term prune joins ABOVE the tf aggregate. Below it, the
+    // postings exchange would shrink from corpus-wide to query-terms-only,
+    // but an r18 interleaved A/B at 32 cores measured that shape 0.50 s
+    // SLOWER on the x_bm25 bench row (min of 5/arm: 1.60 vs 1.10): the
+    // bench queries are stopword-heavy (first-5-token prefixes), so the
+    // prune removes almost nothing while a pre-aggregate probe pays a
     // broadcast-hash lookup per corpus TOKEN rather than per postings
-    // GROUP. Selective-query deployments at corpus scale should flip to
-    // "pre"; results are bit-identical either way (the term is a group
+    // GROUP. Both placements give identical results (the term is a group
     // key, so dropping whole groups before or after counting commutes).
-    val prunePre = docs.sparkSession.conf
-      .get("spark.graft.bm25.prune", "post") == "pre"
-    val tf0 = if (prunePre) toks.join(broadcast(qt), Seq("__term")) else toks
-    val tfAgg = tf0.groupBy(col(idCol), col("__term"))
+    val tf = toks.groupBy(col(idCol), col("__term"))
       .agg(count(lit(1)).as("__tf"))
-    val tf = if (prunePre) tfAgg else tfAgg.join(broadcast(qt), Seq("__term"))
+      .join(broadcast(qt), Seq("__term"))
     val dlen = docs.select(col(idCol),
       tokenCount(col(textCol)).cast("double").as("__dl"))
     val stats = docs.agg(count(lit(1)).cast("double").as("__n"),

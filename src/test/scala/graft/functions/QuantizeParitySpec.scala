@@ -9,9 +9,9 @@ import graft.SparkTestBase
   * it replaced in Similarity.quantizeInt8 — the DuckDB oracle replays the
   * quantization arithmetic (s_quantize), so not one bit may move. Covers
   * the quirks the comparison semantics of Greatest/Least imply: null
-  * elements → 127 under non-zero scale, 0 under scale 0; a NaN element
-  * NaN-poisons the scale and zeroes every quantized value; ±Inf saturates
-  * through the int cast before the clamp. */
+  * elements → 127 under non-zero scale, 0 under scale 0. A NaN or ±Inf
+  * element, wherever it sits in the vector, makes the quantization ratio
+  * non-finite, and both paths raise rather than return a vector. */
 class QuantizeParitySpec extends SparkTestBase {
 
   private def hofQuantize(vec: org.apache.spark.sql.Column) = {
@@ -65,10 +65,14 @@ class QuantizeParitySpec extends SparkTestBase {
 
   test("non-finite elements raise on BOTH paths (ANSI cast semantics)") {
     import spark.implicits._
-    for (bad <- Seq(Double.NaN, Double.PositiveInfinity,
-        Double.NegativeInfinity)) {
-      val df = Seq((1L, Seq(bad, 1.0))).toDF("id", "vec")
-      // the legacy transform's double→int cast raises CAST_OVERFLOW under
+    // NaN ahead of a smaller element must keep the scale NaN: a max loop
+    // that lets a later finite element replace it yields scale 0 and a
+    // silently zeroed vector
+    for (vec <- Seq(Seq(Double.NaN, 1.0), Seq(Double.PositiveInfinity, 1.0),
+        Seq(Double.NegativeInfinity, 1.0), Seq(Double.NaN, 0.0),
+        Seq(3.0, Double.NaN, 0.0))) {
+      val df = Seq((1L, vec)).toDF("id", "vec")
+      // the HOF reference's double→int cast raises CAST_OVERFLOW under
       // ANSI (the Spark 4 default); the native expression must refuse the
       // same inputs rather than silently saturate
       intercept[Exception] {
@@ -80,19 +84,18 @@ class QuantizeParitySpec extends SparkTestBase {
     }
   }
 
-  test("op-level quantizeInt8: native and legacy arms agree end-to-end") {
+  test("op-level quantizeInt8 agrees with the HOF reference end-to-end") {
     import spark.implicits._
     val vecs = (1 to 50).map { i =>
       val r = new scala.util.Random(i)
       (i.toLong, Seq.fill(16)((r.nextDouble() - 0.5) * 3))
     }.toDF("vec_id", "embedding")
-    def run(mode: String) = {
-      spark.conf.set("spark.graft.quantize.impl", mode)
-      try graft.ops.Similarity.quantizeInt8(vecs)
-        .select("vec_id", "scale", "qvec").collect().toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "scale", "qvec").collect().toSeq
         .sortBy(_.getLong(0)).map(_.toString)
-      finally spark.conf.unset("spark.graft.quantize.impl")
-    }
-    assert(run("native") == run("legacy"))
+    val reference = vecs.withColumn("__q", hofQuantize(col("embedding")))
+      .select(col("vec_id"), col("__q.scale").as("scale"),
+        col("__q.qvec").as("qvec"))
+    assert(rows(graft.ops.Similarity.quantizeInt8(vecs)) == rows(reference))
   }
 }
