@@ -34,6 +34,7 @@ import org.apache.spark.sql.types._
  */
 class GraftTable(val spark: SparkSession, val location: String) {
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftTable])
   private def conf: Configuration = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(location).getFileSystem(conf)
 
@@ -205,12 +206,17 @@ class GraftTable(val spark: SparkSession, val location: String) {
       case _ => None
     })
 
-  /** Adding-commit sequence per live file path (min id wins for a path
-    * re-added across snapshots); fallback evidence for pre-stamp files. */
-  private def addedSeqByPath(m: TableMetadata): Map[String, Long] =
-    m.snapshots.sortBy(_.id)
+  /** Data sequence of a file: stamped at commit time; files from
+    * pre-stamp metadata fall back to their adding commit in the retained
+    * snapshot list (min id wins for a path re-added across snapshots),
+    * and to 0 — older than every retained delete — when even that is
+    * gone. The fallback map builds lazily, at most once per resolver. */
+  private def dataSeqOf(m: TableMetadata): DataFile => Long = {
+    lazy val addSeq = m.snapshots.sortBy(_.id)
       .flatMap(sn => sn.addedFiles.map(_ -> sn.id))
       .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).min }
+    f => f.dataSeq.getOrElse(addSeq.getOrElse(f.path, 0L))
+  }
 
   /** Physical (in-file) name of a declared column for a file added at
     * commit sequence `seq`: unwind every rename that happened after the
@@ -242,33 +248,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
   private def plainReadWithPos(m: TableMetadata, s: StructType, files: Seq[DataFile]): DataFrame =
     plainReadImpl(m, s, files, withPos = true)
 
-  /** [[plainReadWithPos]] plus RESOLVED row-lineage columns `__row_id` /
-    * `__last_seq` (Iceberg v3): a materialized cell wins; a NULL cell (or
-    * a non-materialized file) inherits firstRowId + position for the id
-    * and the file's data sequence for the last-updated number. The
-    * resolution joins the driver-resident file list, explicitly broadcast
-    * (metadata ≪ data), and rides the scan — no shuffle. */
-  private def plainReadLineage(m: TableMetadata, s: StructType,
-      files: Seq[DataFile]): DataFrame =
-    attachLineage(plainReadImpl(m, s, files, withPos = true,
-      withLineage = true), m, files)
-
-  private def attachLineage(df: DataFrame, m: TableMetadata,
-      files: Seq[DataFile]): DataFrame = {
-    lazy val addSeq = addedSeqByPath(m)
-    val sp = spark
-    import sp.implicits._
-    val fileMeta = files.map(f => (f.path,
-        f.firstRowId.map(Long.box).orNull: java.lang.Long,
-        Long.box(f.dataSeq.getOrElse(addSeq.getOrElse(f.path, 0L)))))
-      .toDF("__lfile", "__frid", "__fseq")
-    df.join(broadcast(fileMeta), col("__file") === col("__lfile"))
-      .withColumn("__row_id",
-        coalesce(col("__mrid"), col("__frid") + col("__pos")))
-      .withColumn("__last_seq", coalesce(col("__mseq"), col("__fseq")))
-      .drop("__lfile", "__frid", "__fseq", "__mrid", "__mseq")
-  }
-
   /** Groups files by (partition layout, physical-name era): each group is
     * one parquet scan under the era's physical schema, aliased back to the
     * declared names — renames stay metadata-only. The re-projection also
@@ -287,8 +266,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     if (files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType(s.fields ++ posFields))
-    lazy val addSeq = addedSeqByPath(m)
-    def seqOf(f: DataFile): Long = f.dataSeq.getOrElse(addSeq.getOrElse(f.path, 0L))
+    val seqOf = dataSeqOf(m)
     def physNames(seq: Long): Seq[String] =
       s.fields.toSeq.map(f => physicalName(m, f.name, seq))
     // type-promotion eras: a file written before an ALTER COLUMN … TYPE
@@ -348,14 +326,18 @@ class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** Read `subset` of a snapshot's files with its merge-on-read deletes
-    * applied. A delete applies only to files ADDED before it (file
-    * `dataSeq` < delete seq), so files are grouped by their applicable
-    * delete set — each group is one scan anti-joined per delete file
-    * (null-safely on key columns for equality deletes; on (file, row
-    * index) for position deletes), unioned back together. `dataSeq` is
-    * stamped on the file at commit time; only files from pre-dataSeq
-    * metadata fall back to deriving it from the retained snapshot list
-    * (0 — predates every retained delete — when even that is gone). */
+    * applied. A delete hides a row only when the row's file is older than
+    * the delete (file data sequence `__fseq` < delete sequence `__dseq`),
+    * and that rule is stated once, as a join predicate: one scan of
+    * `subset` picks up each row's `__fseq` (and its row-lineage inputs)
+    * through one broadcast join of the driver-resident file list
+    * (metadata ≪ data — no shuffle), then each delete kind is one
+    * anti-join against the union of that kind's files — null-safe on the
+    * keys per current key-column set for equality deletes, on (file, row
+    * index) for position deletes, a broadcast per-file run probe for
+    * deletion vectors — whatever the number of delete commits. Delete
+    * files no newer than every file in `subset` are pruned on the driver;
+    * with none left the read is join-free. */
   private def readWithDeletes(snap: Option[GraftSnapshot], m: TableMetadata,
       subset: Seq[DataFile], keepPos: Boolean = false,
       keepLineage: Boolean = false): DataFrame = {
@@ -368,64 +350,71 @@ class GraftTable(val spark: SparkSession, val location: String) {
     if (snap.isEmpty || subset.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         StructType(s.fields ++ posFields))
-    val dels = snap.map(_.deleteFiles).getOrElse(Seq.empty)
-    if (dels.isEmpty) {
-      if (!keepLineage)
-        return if (keepPos) plainReadWithPos(m, s, subset) else plainRead(m, s, subset)
-      val lr = plainReadLineage(m, s, subset)
-      return if (keepPos) lr else lr.drop("__file", "__pos")
-    }
-    lazy val addSeq: Map[String, Long] = addedSeqByPath(m)
-    def seqOf(f: DataFile): Long =
-      f.dataSeq.getOrElse(addSeq.getOrElse(f.path, 0L))
-    subset
-      .groupBy(f => dels.filter(_.seq > seqOf(f)).map(_.path).toSet)
-      .toSeq.sortBy(_._1.size)
-      .map { case (applicable, files) =>
-        val appl = dels.filter(d => applicable(d.path))
-        val base =
-          if (keepLineage) plainReadLineage(m, s, files)
-          else if (keepPos || appl.exists(d => d.isPositional || d.isDv))
-            plainReadWithPos(m, s, files)
-          else plainRead(m, s, files)
-        val filtered = appl.foldLeft(base) { (df, d) =>
-          if (d.isDv) {
-            // deletion vector: per-file run-length bitsets merge into a
-            // per-row membership probe — a broadcast of one compact row
-            // per affected data file and an O(log runs) binary search per
-            // scanned row (native DvContains), never a row-list anti-join
-            val dv = spark.read.parquet(s"$dataDir/${d.path}")
-              .select(col("__file").as("__delf"), col("__runs"))
-            df.join(broadcast(dv), col("__file") === col("__delf"), "left_outer")
-              .filter(col("__runs").isNull ||
-                !graft.functions.GraftFunctions.dv_contains(
-                  col("__runs"), col("__pos")))
-              .drop("__delf", "__runs")
-          } else if (d.isPositional) {
-            val del = readDeleteContent(d)
-              .select(col("__file").as("__delf"), col("__pos").as("__delp"))
-            df.join(del,
-              col("__file") === col("__delf") && col("__pos") === col("__delp"),
-              "left_anti")
-          } else {
-            // null-safe equality (Iceberg equality-delete semantics: null
-            // equals null), so a recorded null-key tuple deletes null rows.
-            // Key columns were recorded under the names current at the
-            // delete's commit; later renames are mapped forward.
-            val del = readDeleteContent(d)
-              .select(d.keyCols.map(k => col(k).as(s"__del_$k")).toIndexedSeq: _*)
-            df.join(del,
-              d.keyCols.map(k =>
-                col(declaredNameNow(m, k, d.seq)) <=> col(s"__del_$k"))
-                .reduce(_ && _),
-              "left_anti")
-          }
-        }
-        filtered.select((s.fields.map(f => col(f.name)) ++
-          posFields.map(f => col(f.name))).toIndexedSeq: _*)
+    val seqOf = dataSeqOf(m)
+    val oldest = subset.map(seqOf).min
+    val dels = snap.get.deleteFiles.filter(_.seq > oldest)
+    val scanned = plainReadImpl(m, s, subset,
+      withPos = keepPos || keepLineage || dels.nonEmpty, withLineage = keepLineage)
+    if (dels.isEmpty && !keepLineage) return scanned
+    val sp = spark
+    import sp.implicits._
+    val fileMeta = subset.map(f => (f.path,
+        f.firstRowId.map(Long.box).orNull: java.lang.Long, seqOf(f)))
+      .toDF("__lfile", "__frid", "__fseq")
+    val withMeta = scanned.join(broadcast(fileMeta), col("__file") === col("__lfile"))
+    // row lineage (Iceberg v3): a materialized cell wins; a NULL cell (or
+    // a non-materialized file) inherits firstRowId + position for the id
+    // and the file's data sequence for the last-updated number
+    val base = if (!keepLineage) withMeta else withMeta
+      .withColumn("__row_id", coalesce(col("__mrid"), col("__frid") + col("__pos")))
+      .withColumn("__last_seq", coalesce(col("__mseq"), col("__fseq")))
+    // one anti-join per delete kind (per key set for equality deletes)
+    // against the union of its files, each row tagged with its sequence
+    def anti(df: DataFrame, kind: Seq[DeleteFile], on: Column,
+        bcast: Boolean = false)(rows: DeleteFile => DataFrame): DataFrame =
+      if (kind.isEmpty) df else {
+        val del = kind.map(d => rows(d).withColumn("__dseq", lit(d.seq)))
+          .reduce(_.unionByName(_))
+        df.join(if (bcast) broadcast(del) else del,
+          on && col("__fseq") < col("__dseq"), "left_anti")
       }
-      .reduce(_.unionByName(_))
+    val eqApplied = dels.filterNot(d => d.isPositional || d.isDv)
+      .groupBy(d => d.keyCols.map(k => declaredNameNow(m, k, d.seq)).sorted)
+      .toSeq.sortBy(_._1.mkString(","))
+      .foldLeft(base) { case (df, (keys, group)) =>
+        anti(df, group, nullSafeKeyMatch(keys))(equalityDeleteKeys(m, s, _)._2) }
+    val posApplied = anti(eqApplied, dels.filter(_.isPositional),
+        col("__file") === col("__delf") && col("__pos") === col("__delp"))(d =>
+      readDeleteContent(d).select(col("__file").as("__delf"), col("__pos").as("__delp")))
+    // deletion vectors: per-file run-length bitsets probed per scanned row
+    // (native DvContains, O(log runs)) against a broadcast of one compact
+    // row per affected data file and DV commit — an anti-join, so two DVs
+    // on one file hide the union of their rows without duplicating any
+    val applied = anti(posApplied, dels.filter(_.isDv), col("__file") === col("__delf") &&
+        graft.functions.GraftFunctions.dv_contains(col("__runs"), col("__pos")),
+        bcast = true)(d => spark.read.parquet(s"$dataDir/${d.path}")
+      .select(col("__file").as("__delf"), col("__runs")))
+    applied.select((s.fields.map(f => col(f.name)) ++
+      posFields.map(f => col(f.name))).toIndexedSeq: _*)
   }
+
+  /** An equality-delete file's key tuples as `__del_<k>` columns, `k` the
+    * key's CURRENT declared name (keys are recorded under the names
+    * current at the delete's commit; later renames map forward), cast to
+    * the declared type so deletes written across a type promotion union
+    * together. */
+  private def equalityDeleteKeys(m: TableMetadata, s: StructType,
+      d: DeleteFile): (Seq[String], DataFrame) = {
+    val now = d.keyCols.map(k => declaredNameNow(m, k, d.seq))
+    now -> readDeleteContent(d).select(d.keyCols.zip(now).map { case (k, n) =>
+      col(k).cast(s(n).dataType).as(s"__del_$n") }.toIndexedSeq: _*)
+  }
+
+  /** Null-safe match of a table row against [[equalityDeleteKeys]] —
+    * Iceberg's equality-delete contract: null equals null, so a recorded
+    * null-key tuple deletes null rows. */
+  private def nullSafeKeyMatch(keys: Seq[String]): Column =
+    keys.map(k => col(k) <=> col(s"__del_$k")).reduce(_ && _)
 
   // ---------------------------------------------------------------------
   // Write paths
@@ -489,7 +478,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
       if (branch.isEmpty &&
           properties.getOrElse("write.stats.ndv.enabled", "false") == "true")
         scala.util.Try(advanceColumnStats(df, result.id)).failed
-          .foreach(e => System.err.println(
+          .foreach(e => log.warn(
             s"[graft] incremental stats update failed (recompute via " +
               s"CALL compute_table_stats): $e"))
       result
@@ -1710,13 +1699,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
           val parentState = parent
             .map(p => readWithDeletes(Some(p), m, p.files))
             .getOrElse(emptyState)
-          val delKeys = readDeleteContent(d)
-            .select(d.keyCols.map(k => col(k).as(s"__del_$k")).toIndexedSeq: _*)
-          val deleted = parentState.join(delKeys,
-            d.keyCols.map(k =>
-              col(declaredNameNow(m, k, d.seq)) <=> col(s"__del_$k"))
-              .reduce(_ && _),
-            "left_semi")
+          val (keys, delKeys) = equalityDeleteKeys(m, schema, d)
+          val deleted = parentState.join(delKeys, nullSafeKeyMatch(keys), "left_semi")
           Seq(deleted
             .withColumn("_change_type", lit("DELETE"))
             .withColumn("_commit_snapshot_id", lit(s.id))) ++ insertPart
@@ -2411,7 +2395,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val m = meta
     val sp = spark
     import sp.implicits._
-    lazy val addSeq = addedSeqByPath(m)
+    val seqOf = dataSeqOf(m)
     val rows = m.currentSnapshot.toSeq.flatMap { s =>
       // resolve per-manifest so status reflects the PHYSICAL layout;
       // legacy inline file lists read as one synthetic manifest
@@ -2421,7 +2405,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
         else Seq(s"v${m.version}.metadata.json" ->
           ManifestData(s.inlineFiles, s.inlineDeleteFiles))
       groups.flatMap { case (name, data) =>
-        def seqOf(f: DataFile): Long = f.dataSeq.getOrElse(addSeq.getOrElse(f.path, 0L))
         val written = (data.files.map(seqOf) ++ data.deleteFiles.map(_.seq))
           .maxOption.getOrElse(s.id)
         data.files.map { f =>
@@ -2449,12 +2432,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val sp = spark
     import sp.implicits._
     val metaDir = SnapshotLog.metadataDir(location)
-    lazy val addSeq = addedSeqByPath(m)
+    val seqOf = dataSeqOf(m)
     val byName = scala.collection.mutable.Map.empty[String, (Long, Long, Long, Long, Long)]
     def resolve(name: String): (Long, Long, Long, Long, Long) =
       byName.getOrElseUpdate(name, {
         val data = SnapshotLog.readManifest(location, name, conf)
-        def seqOf(f: DataFile): Long = f.dataSeq.getOrElse(addSeq.getOrElse(f.path, 0L))
         val written = (data.files.map(seqOf) ++ data.deleteFiles.map(_.seq))
           .maxOption.getOrElse(0L)
         val len = fs.getFileStatus(new Path(metaDir, name)).getLen
@@ -3003,7 +2985,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
           // only means late imports become orphans for remove_orphan_files
           try {
             if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES))
-              System.err.println("[add_files] importer pool did not quiesce " +
+              log.warn("[add_files] importer pool did not quiesce " +
                 "within 10 minutes; late imports become orphans " +
                 "(remove_orphan_files collects them)")
           } catch {
@@ -3075,7 +3057,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
       // and the source keeps no back-reference — the source's
       // expire_snapshots / remove_orphan_files / DROP can delete files
       // this clone still reads. Pass link = true for physical immunity.
-      org.slf4j.LoggerFactory.getLogger(classOf[GraftTable]).warn(
+      log.warn(
         s"snapshot clone '$targetName' is METADATA-ONLY: it shares " +
           s"'${m.name}''s data files and stays dependent on the source's " +
           "retention/DROP lifecycle; use link = true for a physically " +
@@ -3131,7 +3113,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
             pool.shutdown()
             try {
               if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES))
-                System.err.println("[snapshot] linker pool did not quiesce " +
+                log.warn("[snapshot] linker pool did not quiesce " +
                   "within 10 minutes; late links become orphans of the " +
                   "target (its remove_orphan_files collects them)")
             } catch {

@@ -256,7 +256,7 @@ class GraftMicroBatchStream(spark: SparkSession, location: String,
         "stream to pin the new schema")
   }
 
-  /** Era of a data file — batch parity (GraftTable.addedSeqByPath):
+  /** Era of a data file — batch parity (GraftTable.dataSeqOf):
     * unstamped legacy files (pre-dataSeq metadata) resolve from the
     * retained add history, 0 only when even that is gone; a bare
     * getOrElse(0L) would silently read a post-rename unstamped file

@@ -175,6 +175,43 @@ class MorDeleteSpec extends SparkTestBase {
     assert(snap.removedFiles.isEmpty && snap.deleteFiles.nonEmpty)
   }
 
+  test("reads plan one sequence-gated anti-join per delete kind, whatever the delete commits") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val cow = fresh("kinds-cow"); val mor = fresh("kinds-mor")
+    def reappend(ids: String*): Unit = Seq(cow, mor).foreach(_.append(
+      ActivityData.day1(spark).filter(col("txn_id").isin(ids: _*))))
+    // 4 equality-delete commits on overlapping keys, with re-appends of
+    // the same keys between them (live again under sequence semantics)
+    val upd1 = col("txn_id").isin("txn3", "txn4")
+    cow.updateWhere(upd1, Seq("amount" -> lit(101.0)))
+    mor.updateWhereMoR(upd1, Seq("amount" -> lit(101.0)), Seq("txn_id"))
+    reappend("txn3", "txn5")
+    cow.merge(ActivityData.day4(spark), ActivityData.mergeKeys, ActivityData.updateCols)
+    mor.mergeMoR(ActivityData.day4(spark), ActivityData.mergeKeys, ActivityData.updateCols)
+    reappend("txn8", "txn10", "txn4")
+    val upd2 = col("txn_id").isin("txn3", "txn8")
+    cow.updateWhere(upd2, Seq("category" -> lit("Moved")))
+    mor.updateWhereMoR(upd2, Seq("category" -> lit("Moved")), Seq("txn_id"))
+    reappend("txn3")
+    cow.merge(ActivityData.day4(spark), ActivityData.mergeKeys, ActivityData.updateCols)
+    mor.mergeMoR(ActivityData.day4(spark), ActivityData.mergeKeys, ActivityData.updateCols)
+    // plus one position-delete commit
+    cow.deleteWhere(col("txn_id") === "txn5")
+    mor.deleteWherePositional(col("txn_id") === "txn5")
+    assert(mor.meta.currentSnapshot.get.deleteFiles.map(_.kind).distinct.sorted
+      === Seq("equality", "position"))
+    assert(mor.meta.currentSnapshot.get.deleteFiles.count(_.kind == "equality") >= 4)
+    val df = mor.toDF
+    val b = df.collect().map(_.toString).sorted.toSeq
+    val antiJoins = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case j: BaseJoinExec if j.joinType == LeftAnti => j }
+    assert(antiJoins.size === 2, s"one equality + one position anti-join:\n" +
+      df.queryExecution.executedPlan)
+    assert(cow.toDF.collect().map(_.toString).sorted.toSeq === b)
+  }
+
   test("SQL UPDATE and MERGE honor merge-on-read table properties") {
     val wh = java.nio.file.Files.createTempDirectory("mor-sql2-wh").toString
     spark.conf.set("spark.sql.catalog.morsq2",
